@@ -13,6 +13,9 @@ iterative float centroids) and get the driver's rows-only check.
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1249,25 +1252,20 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate generation at 100 TB.
     pairs = dedup.ngram_jaccard_pairs(docs, "text", "doc_id", n=3,
                                       threshold=0.05, max_doc_freq=1000)
-    # algorithm="star" (r11 optimization): the EXPLORATORY 0.05 threshold
-    # chains clusters to diameter ~13, the regime where the O(log d)
-    # star contraction beats label propagation's O(d) rounds (the r08
-    # crossover measurement, SCALING.md) — labels are identical
-    # (comp = min id; oracle hash-match re-proven at sf0.001/sf0.01).
-    return dedup.dedup_clusters(docs, pairs, "doc_id", algorithm="star") \
+    return dedup.dedup_clusters(docs, pairs, "doc_id") \
         .select("doc_id", "cluster_id")
 
 
 def q_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Large-star/small-star connected components on a deliberately
     chain-shaped graph (50-long doc-id chains, diameter ≈ 50) — the
-    O(log d) high-diameter path where label propagation would need 50
-    rounds. Oracle: recursive-CTE transitive closure over the same edges."""
+    high-diameter regime the O(log d) contraction exists for. Oracle:
+    recursive-CTE transitive closure over the same edges."""
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     edges = (docs.where(F.col("doc_id") % 50 != 49)
              .select(F.col("doc_id").alias("src"),
                      (F.col("doc_id") + 1).alias("dst")))
-    return dedup.connected_components_star(edges).select("node", "comp")
+    return dedup.connected_components(edges).select("node", "comp")
 
 
 def q_global_rank_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1492,7 +1490,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       n=3, threshold=0.05)
     kept = dedup.select_representatives(
         docs, pairs.select("id_a", "id_b"), "doc_id",
-        order_by=[F.col("n_chars").desc()], algorithm="star")
+        order_by=[F.col("n_chars").desc()])
     return kept.select("doc_id", "source", "n_chars")
 
 
@@ -2828,34 +2826,33 @@ def entry(spark: SparkSession) -> DataFrame:
     return q1_pricing_summary(spark, SF_SMOKE)
 
 
+_CORRECTNESS_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+
+def _stalest_first(entries: dict) -> dict:
+    """``entries`` reordered stalest-first for the driver, which checks only
+    the first 50 ``queries()`` entries per round: never-checked queries
+    lead, then ascending by each query's newest round in the
+    ``CORRECTNESS_r<N>.json`` files beside this module. The sort is stable,
+    so ties keep literal order; with no such files the order is the
+    literal's. Each driver round thus rotates its window to the stalest
+    entries without anyone editing the registry."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    last: dict[str, int] = {}
+    for fn in os.listdir(here):
+        m = _CORRECTNESS_FILE.fullmatch(fn)
+        if m:
+            with open(os.path.join(here, fn)) as f:
+                for name in json.load(f):
+                    last[name] = max(last.get(name, -1), int(m.group(1)))
+    return dict(sorted(entries.items(), key=lambda kv: last.get(kv[0], -1)))
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver evaluates exactly the FIRST 50 dict entries.
-    # r11 window (VERDICT r10 next-round #1): the 19 r07-stale entries
-    # lead (ledgered in r10 as the r11 queue head: q_hll_distinct ...
-    # q_dsir_weights), then 5 changed-operator re-verifications for the
-    # distinct-hash/signature-space banding rewrites (VERDICT r10
-    # #2/#3) -- q_minhash_lsh_pairs (signs/bands/verifies once per
-    # DISTINCT shingle set), q_simhash_pairs and q_image_neardup (both
-    # consume the rewritten dedup.hamming_band_pairs, which now bands
-    # distinct hash VALUES and recovers id pairs by an output-sized
-    # equi-join), q_neardup_against (minhash_signatures' signature
-    # kernel extracted into _minhash_sig_expr -- expression-identical,
-    # same rule as the r10 q_simhash_pairs extraction), and
-    # q_dedup_clusters (VERDICT r10 #3 names it alongside the minhash
-    # rewrite) -- then the NEW q_audio_neardup (energy-hash audio
-    # near-dup tier, r11; never driver-checked, so the rotation test
-    # requires it inside the window) -- then the r08-green block in
-    # queue order (q_winnow_fingerprints onward, first 25 of the 47;
-    # q_normalize displaced by the audio insert). The 22 r08-green
-    # entries the window cannot fit (q_normalize, q_groupall ...
-    # q6_forecast_revenue) sit directly below position 50 and lead the
-    # r12 window. Every insertion/displacement is ledgered at the
-    # displacement point so the header never overstates what the driver
-    # verified (ADVICE r06 #1).
-    return {
-        # -- r11 window head: the 19 r07-green entries (displaced from
-        #    the r10 window by its head insertions; ledgered in r10 as
-        #    the r11 queue head, VERDICT r10 #1) --
+    # ORDER MATTERS: the driver evaluates exactly the FIRST 50 entries, so
+    # the literal is returned stalest-first (see _stalest_first) and its
+    # own order only breaks ties.
+    return _stalest_first({
         "q_hll_distinct": q_hll_distinct,
         "q_weighted_sample": q_weighted_sample,
         "q_mix_proportions": q_mix_proportions,
@@ -2875,23 +2872,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_corpus_kl": q_corpus_kl,
         "q_bloom_anti_join": q_bloom_anti_join,
         "q_dsir_weights": q_dsir_weights,
-        # -- r11 window: changed-operator re-verification (see header;
-        #    the distinct-hash/signature-space rewrites of
-        #    dedup.hamming_band_pairs / dedup.minhash_lsh_pairs and the
-        #    _minhash_sig_expr extraction, VERDICT r10 #2/#3) --
         "q_minhash_lsh_pairs": q_minhash_lsh_pairs,
         "q_simhash_pairs": q_simhash_pairs,
         "q_image_neardup": q_image_neardup,
         "q_neardup_against": q_neardup_against,
         "q_dedup_clusters": q_dedup_clusters,
-        # -- r11 window: NEW audio near-dup tier (multimodal.audio_ehash
-        #    + the shared hamming banding), first driver run —
-        #    displacing q_normalize from the window tail to the r12
-        #    queue head --
         "q_audio_neardup": q_audio_neardup,
-        # -- r11 window: r08-green block, queue order (first 25 of the
-        #    47; the 22 displaced are ledgered below position 50 and
-        #    lead the r12 window) --
         "q_winnow_fingerprints": q_winnow_fingerprints,
         "q_winnow_overlap": q_winnow_overlap,
         "q_url_canonical": q_url_canonical,
@@ -2917,10 +2903,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_histogram": q_histogram,
         "q_histogram_summary": q_histogram_summary,
         "q_pivot": q_pivot,
-        # ---- position 50 ends here ----
-        # -- r12 queue head: the 22 r08-green entries the r11 window
-        #    could not fit (displaced by the 5 re-verifications and the
-        #    q_audio_neardup insert above); NOT re-verified this round --
         "q_normalize": q_normalize,
         "q_groupall": q_groupall,
         "q_fold_reduce": q_fold_reduce,
@@ -2943,9 +2925,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q4_order_priority_exists": q4_order_priority_exists,
         "q5_local_supplier_volume": q5_local_supplier_volume,
         "q6_forecast_revenue": q6_forecast_revenue,
-        # -- r09-green block (CORRECTNESS_r09 verified these in window
-        #    order; q_neardup_against moved to the r11 window head for
-        #    changed-operator re-verification) --
         "q7_volume_shipping": q7_volume_shipping,
         "q8_market_share": q8_market_share,
         "q9_product_profit": q9_product_profit,
@@ -2991,11 +2970,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_pagerank": q_pagerank,
         "q_exact_dedup": q_exact_dedup,
         "q_ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-        # -- r10-green block (freshest driver rows, tail of the rotation;
-        #    CORRECTNESS_r10 verified these in window order;
-        #    q_minhash_lsh_pairs / q_simhash_pairs / q_image_neardup /
-        #    q_dedup_clusters moved to the r11 window for
-        #    changed-operator re-verification) --
         "q_deterministic_sample": q_deterministic_sample,
         "q_train_split": q_train_split,
         "q_stratified_sample": q_stratified_sample,
@@ -3042,7 +3016,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_cosine_topk_lsh": q_cosine_topk_lsh,
         "q_cosine_topk_ivf": q_cosine_topk_ivf,
         "q_embedding_neardup": q_embedding_neardup,
-    }
+    })
 
 
 def retired_probes() -> dict[str, tuple]:

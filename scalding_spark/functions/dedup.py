@@ -393,6 +393,9 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
             F.countDistinct(F.col("id"), gkey).alias("dg"),
             F.countDistinct(gkey).alias("g")).first()
         if st["dg"] > st["di"]:
+            # a caller that catches this must not be left holding the
+            # input-sized index until the next release_materialized()
+            docs.unpersist()
             raise ValueError(
                 "ngram_jaccard_pairs requires unique doc ids: "
                 f"{st['dg'] - st['di']} id(s) appear with more than one "
@@ -950,95 +953,6 @@ def hamming_band_pairs(hashes: DataFrame, id_col: str, hash_col: str,
     return same.unionByName(cross)
 
 
-def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
-                         max_iter: int = 50,
-                         stats: dict | None = None) -> DataFrame:
-    """Connected components over an undirected edge list → (node, component),
-    where component = the minimum node id in the component.
-
-    Min-label propagation to a fixed point: each iteration joins the
-    symmetrized edge list to the current labels and takes the per-node min
-    of self + neighbor labels. Iterations needed = graph diameter — for
-    near-dup clusters (small, dense cliques from LSH/Jaccard pair
-    generators) that is 2-3, so the total cost is a handful of
-    fixed-width-key shuffles; nothing is ever collected to the driver.
-
-    Scale notes: the edge list is persisted once (reused every iteration);
-    labels are eagerly localCheckpoint-ed per iteration — without that the
-    logical plan doubles each round (same lesson as PageRank, matrix.py).
-    Convergence is detected with a changed-label count that piggybacks on
-    the already-shuffled aggregate. For web-scale graphs with long chains
-    (diameter ≫ 10), use ``connected_components_star`` (O(log d) rounds);
-    for dedup workloads label propagation wins on constant factors —
-    PROVIDED the pair threshold is tight. Measured crossover (r08,
-    SCALING.md): an EXPLORATORY-low Jaccard threshold (0.05 at sf1)
-    chains near-dup clusters to diameter 13, where this loop runs 13
-    rounds vs star's 5 and star is ~1.7× faster end-to-end; at
-    production thresholds (≥0.7) clusters stay clique-shaped and label
-    propagation converges in 2-3 rounds. Rounds scale with cluster
-    DIAMETER, not corpus size — at 100 TB the iteration count is the
-    same, each round just shuffles more edges.
-    ``stats['iterations']`` reports rounds used (matching
-    ``connected_components_star`` / ``kmeans``).
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # persist the symmetrized edge list ALREADY hash-partitioned on the
-    # per-round join key (`b`): every iteration's `sym.join(labels, ...)`
-    # then reuses the in-memory partitioning and exchanges only the
-    # (node-sized) labels side — without this BOTH sides exchanged every
-    # round, and sym (2×edges, the biggest table here) dominated
-    # (VERDICT r09 #2; the one-time repartition pays for itself from
-    # round 2). distinct() already shuffles, so the extra exchange at
-    # build time is edge-list-sized, once.
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))) \
-        .distinct().repartition(F.col("b")).persist()
-    rounds = 0
-    try:
-        # inside the try: this EAGER materialize is the first action over
-        # the persisted sym — a failure here must still unpersist it
-        labels = materialize(
-            sym.select(F.col("a").alias("node")).distinct()
-               .select("node", F.col("node").alias("comp")),
-            eager=True, iterative=True)
-        null_old = F.lit(None).cast(labels.schema["comp"].dataType).alias("old")
-        for _ in range(max_iter):
-            rounds += 1
-            # One shuffle + one action per iteration: the neighbor-min agg
-            # also carries each node's previous label (`old`, exactly one
-            # non-null per node), so convergence detection reads the same
-            # aggregate instead of paying a second join+count job. The lazy
-            # checkpoint materializes during the `changed` action.
-            nbr = (sym.join(labels, sym.b == labels.node)
-                   .select(sym.a.alias("node"), F.col("comp"), null_old))
-            new_labels = materialize(
-                labels.select("node", "comp", F.col("comp").alias("old"))
-                      .union(nbr)
-                      .groupBy("node").agg(F.min("comp").alias("comp"),
-                                           F.min("old").alias("old")),
-                eager=False, iterative=True)
-            # full aggregate, NOT limit(1): a short-circuiting action would
-            # materialize only some partitions of the lazy checkpoint, and
-            # the unmaterialized rest would re-run its whole lineage next
-            # iteration. coalesce: sum over ZERO rows is NULL (empty edge
-            # list — a normal outcome of dedup), which must read as
-            # converged, not never-done
-            changed = new_labels.agg(
-                F.coalesce(F.sum(F.when(F.col("comp") < F.col("old"), 1)
-                                  .otherwise(0)),
-                           F.lit(0))
-            ).collect()[0][0]
-            labels = new_labels.select("node", "comp")
-            if changed == 0:
-                break
-    finally:
-        # unpersist on the error path too — a mid-loop failure (OOM, task
-        # abort) must not leak sym in the executor block cache
-        sym.unpersist()
-    if stats is not None:
-        stats["iterations"] = rounds
-    return labels.select("node", "comp")
-
-
 def decontaminate(corpus: DataFrame, benchmark: DataFrame, text_col: str,
                   id_col: str, n: int = 8, min_shared: int = 1,
                   benchmark_text_col: str | None = None) -> DataFrame:
@@ -1108,22 +1022,27 @@ def contamination_report(corpus: DataFrame, benchmark: DataFrame,
                     .alias("n_shared_ngrams")))
 
 
-def connected_components_star(edges: DataFrame, src: str = "src",
-                              dst: str = "dst", max_iter: int = 30,
-                              stats: dict | None = None) -> DataFrame:
-    """Connected components via alternating large-star / small-star — the
-    high-diameter path promised in ``connected_components``'s docstring.
+def connected_components(edges: DataFrame, src: str = "src",
+                         dst: str = "dst", max_iter: int = 30,
+                         stats: dict | None = None) -> DataFrame:
+    """Connected components over an undirected edge list → (node, comp),
+    where comp = the minimum node id in the component.
 
-    Label propagation needs O(diameter) rounds; this needs O(log d) (the
-    published two-phase star-contraction scheme for MapReduce-style CC).
-    Use it for chain-shaped graphs (linkage chains, web graphs); for dedup
-    clique clusters plain label propagation wins on constant factors.
+    Alternating large-star / small-star contraction (the published
+    two-phase star-contraction scheme for MapReduce-style CC): O(log d)
+    rounds for graph diameter d, so chain-shaped graphs (linkage chains,
+    web graphs, near-dup clusters chained by a low pair threshold) cost a
+    handful of rounds, and dedup clique clusters (diameter 2-3) converge
+    in a few. Rounds scale with cluster DIAMETER, not corpus size — at
+    100 TB the iteration count is the same, each round just shuffles more
+    edges; nothing is ever collected to the driver but one fingerprint
+    row per round.
 
     Each round over the parent-pointer edge set:
 
     - large-star: symmetrize; every neighbor STRICTLY LARGER than u is
-      re-pointed at min(N(u) ∪ {u}). One groupBy(min) + one join, both on
-      fixed-width node ids.
+      re-pointed at min(N(u) ∪ {u}). One window min over a hash
+      partitioning on fixed-width node ids.
     - small-star: orient u > v; every neighbor (all smaller) and u itself
       point at the min neighbor.
 
@@ -1133,8 +1052,7 @@ def connected_components_star(edges: DataFrame, src: str = "src",
     cost an extra join per round; a false stop needs a 64-bit hash-sum
     collision at equal counts (~2⁻⁶⁴, documented trade).
 
-    Returns (node, comp) with comp = min node id of the component, matching
-    ``connected_components``. ``stats['iterations']`` reports rounds used.
+    ``stats['iterations']`` reports rounds used (matching ``kmeans``).
     """
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
          .where(F.col("u") != F.col("v")))
@@ -1185,8 +1103,12 @@ def connected_components_star(edges: DataFrame, src: str = "src",
         # convergence fingerprint is over the round-output MULTISET:
         # each round is a deterministic function of its input's
         # distinct set, so distinct(e_k) == distinct(e_{k-1}) replays
-        # round k+1 identically and the fingerprint stabilizes at
-        # exactly the same round the distinct-set fingerprint did.
+        # round k+1 identically and the fingerprint stabilizes ONE
+        # ROUND LATER than a distinct-set fingerprint would (detection
+        # at round k needs distinct(e_{k-1}) == distinct(e_{k-2})). The
+        # extra round — 2 exchanges + a fingerprint job per call — is
+        # the price of dropping the per-round distinct exchange; the
+        # output is unaffected.
         # large-star
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         ls = (sym.withColumn("m", F.least(F.col("u"), F.min("v").over(wu)))
@@ -1225,18 +1147,14 @@ def connected_components_star(edges: DataFrame, src: str = "src",
 
 
 def dedup_clusters(df: DataFrame, pairs: DataFrame, id_col: str,
-                   id_a: str = "id_a", id_b: str = "id_b",
-                   algorithm: str = "label") -> DataFrame:
+                   id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Assign every row a duplicate-cluster id from a near-dup pair list:
     cluster_id = min doc id in the row's connected component; rows with no
     near-dup edge keep their own id (left join + coalesce, so the full
-    corpus never funnels through the component computation).
-
-    ``algorithm='label'`` (default) is right for dedup graphs (dense
-    cliques, diameter 2-3); ``'star'`` switches to the O(log d)
-    large-star/small-star contraction for chain-shaped pair graphs."""
-    cc = connected_components_star if algorithm == "star" else connected_components
-    comps = cc(pairs, src=id_a, dst=id_b)
+    corpus never funnels through the component computation). Components
+    come from :func:`connected_components`, whose O(log d) rounds also
+    cover pair graphs chained by a low threshold."""
+    comps = connected_components(pairs, src=id_a, dst=id_b)
     return (df.join(comps, df[id_col] == comps.node, "left")
             .withColumn("cluster_id", F.coalesce(F.col("comp"), F.col(id_col)))
             .drop("node", "comp"))
@@ -1244,8 +1162,7 @@ def dedup_clusters(df: DataFrame, pairs: DataFrame, id_col: str,
 
 def select_representatives(df: DataFrame, pairs: DataFrame, id_col: str,
                            order_by: list | None = None,
-                           id_a: str = "id_a", id_b: str = "id_b",
-                           algorithm: str = "label") -> DataFrame:
+                           id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Keep exactly ONE row per duplicate cluster, the keeper chosen by
     ``order_by`` (a list of Columns, e.g. ``[F.col('n_chars').desc()]`` to
     keep the longest; ``[quality.desc()]`` to keep the best-scored). Ties —
@@ -1260,7 +1177,7 @@ def select_representatives(df: DataFrame, pairs: DataFrame, id_col: str,
     exchange keys on cluster_id — no global sort. Rows with no near-dup
     edge are their own cluster and always survive.
     """
-    clustered = dedup_clusters(df, pairs, id_col, id_a, id_b, algorithm)
+    clustered = dedup_clusters(df, pairs, id_col, id_a, id_b)
     if order_by is None:
         return (clustered.where(F.col("cluster_id") == F.col(id_col))
                 .drop("cluster_id"))

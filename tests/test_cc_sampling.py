@@ -249,6 +249,20 @@ def test_ngram_adaptive_space_routing(spark):
         dd.ngram_jaccard_pairs(bad, "text", "doc_id", persist_index=False)
 
 
+def test_ngram_duplicate_id_rejection_releases_index(spark):
+    """The unique-id refusal happens after the shingle index is persisted;
+    a caller that catches it must not be left holding that cache entry."""
+    from scalding_spark.functions import dedup as dd
+    from tests.test_advice_r06 import _cache_manager_empty
+    spark.catalog.clearCache()
+    bad = spark.createDataFrame(
+        [(1, "aa bb cc dd ee ff"), (1, "vv ww xx yy zz qq"),
+         (2, "gg hh ii jj kk ll")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="unique doc ids"):
+        dd.ngram_jaccard_pairs(bad, "text", "doc_id", persist_index=True)
+    assert _cache_manager_empty(spark)
+
+
 def test_ngram_doc_and_set_space_outputs_identical(spark):
     """The two pair-generation spaces are OUTPUT-IDENTICAL on the same
     corpus (the adaptive choice is physical, never semantic), including
@@ -274,52 +288,37 @@ def test_ngram_doc_and_set_space_outputs_identical(spark):
         assert outs["doc"] == _golden_pairs(texts, max_doc_freq=cap)
 
 
-# --- large-star/small-star CC (round-2: the high-diameter path) ------------
+# --- large-star/small-star CC: the high-diameter path ----------------------
 
 def test_star_cc_path_graph_converges_logarithmically(spark):
     """A 200-edge path (diameter 200) must converge in O(log d) rounds, not
-    O(d) — the whole point of the star contraction over label propagation."""
-    from scalding_spark.functions.dedup import connected_components_star
+    O(d) — the whole point of the star contraction."""
+    from scalding_spark.functions.dedup import connected_components
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "src long, dst long")
     stats = {}
-    out = connected_components_star(edges, stats=stats)
+    out = connected_components(edges, stats=stats)
     rows = out.collect()
     assert len(rows) == 201
     assert {r.comp for r in rows} == {0}
     assert stats["iterations"] <= 12, f"took {stats['iterations']} rounds"
 
 
-def test_star_cc_matches_label_propagation(spark):
-    """Oracle parity on a random multi-component graph vs the label-prop
-    implementation (itself oracle-checked against recursive-CTE closure)."""
-    import random
-    from scalding_spark.functions.dedup import (connected_components,
-                                                connected_components_star)
-
-    rng = random.Random(11)
-    edges = [(rng.randrange(120), rng.randrange(120)) for _ in range(90)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    star = {(r.node, r.comp) for r in connected_components_star(df).collect()}
-    label = {(r.node, r.comp) for r in connected_components(df).collect()}
-    assert star == label
-
-
 def test_star_cc_two_components_and_self_loops(spark):
-    from scalding_spark.functions.dedup import connected_components_star
+    from scalding_spark.functions.dedup import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 3), (10, 11)], "src long, dst long")
-    got = {(r.node, r.comp) for r in connected_components_star(edges).collect()}
+    got = {(r.node, r.comp) for r in connected_components(edges).collect()}
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
 
 
 def test_star_cc_empty_edges(spark):
-    from scalding_spark.functions.dedup import connected_components_star
+    from scalding_spark.functions.dedup import connected_components
 
     empty = spark.createDataFrame([], "src long, dst long")
-    assert connected_components_star(empty).count() == 0
+    assert connected_components(empty).count() == 0
 
 
 def test_dedup_clusters_star_algorithm(spark):
@@ -328,7 +327,7 @@ def test_dedup_clusters_star_algorithm(spark):
     docs = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
     pairs = spark.createDataFrame([(0, 1), (1, 2), (4, 5)],
                                   "id_a long, id_b long")
-    out = dedup_clusters(docs, pairs, "doc_id", algorithm="star")
+    out = dedup_clusters(docs, pairs, "doc_id")
     got = {(r.doc_id, r.cluster_id) for r in out.collect()}
     assert got == {(0, 0), (1, 0), (2, 0), (3, 3), (4, 4), (5, 4)}
 

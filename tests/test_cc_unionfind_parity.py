@@ -1,4 +1,4 @@
-"""Differential verification of the connected-components operators against
+"""Differential verification of the connected-components operator against
 an INDEPENDENT pure-Python union-find (py_reference.golden_components).
 
 The driver's SQL oracle for component queries is a DuckDB recursive-CTE
@@ -33,21 +33,33 @@ def _expected(edges):
     return golden_components(nodes, edges)
 
 
-@pytest.mark.parametrize("seed,n_nodes,n_edges", [
+def _with_loops(seed, n_nodes, n_edges):
+    """Raw draws: self-loops and repeated edges kept."""
+    rng = random.Random(seed)
+    return [(rng.randrange(n_nodes), rng.randrange(n_nodes))
+            for _ in range(n_edges)]
+
+
+def _cliques(n):
+    """n/5 five-node stars (diameter 2) — the dedup-shaped graph
+    scripts/scaling.py measures."""
+    return [(i, i - i % 5) for i in range(n) if i % 5]
+
+
+@pytest.mark.parametrize("edges", [
     # sparse (forest-ish, many components), near-critical, dense (one
     # giant component) — the three Erdős–Rényi regimes
-    (7, 200, 60), (8, 200, 190), (9, 120, 400),
-])
-def test_cc_label_matches_unionfind_random_graphs(spark, seed, n_nodes, n_edges):
-    edges = _random_edges(random.Random(seed), n_nodes, n_edges)
+    _random_edges(random.Random(7), 200, 60),
+    _random_edges(random.Random(8), 200, 190),
+    _random_edges(random.Random(9), 120, 400),
+    _random_edges(random.Random(11), 200, 120),
+    _random_edges(random.Random(12), 90, 300),
+    _with_loops(11, 120, 90),
+    _cliques(500),
+], ids=["er7_sparse", "er8_critical", "er9_dense", "er11", "er12",
+        "loops11", "cliques500"])
+def test_cc_matches_unionfind(spark, edges):
     got = _spark_labels(spark, dedup.connected_components, edges)
-    assert got == _expected(edges)
-
-
-@pytest.mark.parametrize("seed,n_nodes,n_edges", [(11, 200, 120), (12, 90, 300)])
-def test_cc_star_matches_unionfind_random_graphs(spark, seed, n_nodes, n_edges):
-    edges = _random_edges(random.Random(seed), n_nodes, n_edges)
-    got = _spark_labels(spark, dedup.connected_components_star, edges)
     assert got == _expected(edges)
 
 
